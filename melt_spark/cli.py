@@ -105,11 +105,10 @@ def cmd_sync(args) -> int:
     semantics: exit 1 when out of sync, repair nothing."""
     from pyspark.sql import functions as F
 
-    from .operators.diff import SIDE, diff
-    from .operators.outbox import latest_outbox_state, write_outbox
-    from .operators.sync import sync_plan
-
-    from .operators.outbox import read_outbox
+    from .operators.diff import TABLE_ONLY, TOPIC_ONLY, diff
+    from .operators.outbox import (latest_outbox_state, read_outbox,
+                                   write_outbox)
+    from .operators.sync import materialize_repair, sync_plan
 
     spark = _spark()
     sources = _load_sources(args.sources)
@@ -131,13 +130,19 @@ def cmd_sync(args) -> int:
     for src in sources:
         msgs = src.messages(read(src))
         d = diff(msgs, state.filter(F.col("topic") == src.default_topic))
-        sides = {r[SIDE]: r["n"] for r in
-                 d.groupBy(SIDE).agg(F.count(F.lit(1)).alias("n")).collect()}
+        # diff once: --check-only aggregates the plan, a repair counts and
+        # writes the same held batch (upserts carry a value, tombstones not)
+        repair = sync_plan(d) if args.check_only else materialize_repair(d)
+        got = repair.agg(F.count(F.lit(1)).alias("n"),
+                         F.count("value").alias("upserts")).collect()[0]
+        sides = {side: k for side, k in (
+            (TABLE_ONLY, got["upserts"]),
+            (TOPIC_ONLY, got["n"] - got["upserts"])) if k}
         n = sum(sides.values())
         total += n
         report[src.default_topic] = {"out_of_sync": n, **sides}
         if n and not args.check_only:
-            write_outbox(sync_plan(d), args.outbox, batch_id=batch_id)
+            write_outbox(repair, args.outbox, batch_id=batch_id)
     print(json.dumps({"topics": report, "total_out_of_sync": total,
                       "repaired": not args.check_only and total > 0}))
     return 1 if (args.check_only and total) else 0

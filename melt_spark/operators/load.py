@@ -6,8 +6,12 @@ per-topic counts logged (golden counts, melt_test.clj:41-56).
 
 Spark restatement: scan → Source.messages() (transforms applied — SAME
 pipeline diff uses) → sink. Backpressure, async batching and the flush
-barrier are the Kafka sink's own semantics; counts come from one aggregate
-on the sunk frame.
+barrier are the Kafka sink's own semantics. Each source is read twice: one
+per-topic aggregate before the send yields both the counts and the
+message-contract check (so a violation raises before anything is sent),
+then the send itself. The counts are not taken from the send: send_fn may
+never execute its frame (a test collector), so observing the write would
+count nothing.
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ from typing import Callable, Iterable, TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .messages import validate_messages
+from .messages import TOPIC, invalid_message
 
 if TYPE_CHECKING:
     from ..model import Source
@@ -37,18 +41,18 @@ def load_sources(sources: Iterable["Source"],
     for source in sources:
         log.info("load start %s", source.full_name)        # melt.clj:448-450
         msgs = source.messages(read_fn(source))
-        if validate:
-            # after transforms EVERY message needs topic+key (keyless
-            # sources must have supplied one via a transform — the
-            # reference's spec-assert fails there too, melt.clj:28)
-            bad = validate_messages(msgs, keyed=True).limit(1).count()
-            if bad:
-                raise ValueError(
-                    f"{source.full_name}: message constraint violated "
-                    f"(null topic/key) — reference spec-assert, melt.clj:28")
+        stats = msgs.groupBy(TOPIC).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(invalid_message(keyed=True)).alias("bad")).collect()
+        # after transforms EVERY message needs topic+key (keyless sources
+        # must have supplied one via a transform — the reference's
+        # spec-assert fails there too, melt.clj:28)
+        if validate and any(row["bad"] for row in stats):
+            raise ValueError(
+                f"{source.full_name}: message constraint violated "
+                f"(null topic/key) — reference spec-assert, melt.clj:28")
         send_fn(msgs)
-        for row in msgs.groupBy("topic").agg(
-                F.count(F.lit(1)).alias("n")).collect():
-            counts[row["topic"]] = counts.get(row["topic"], 0) + row["n"]
+        for row in stats:
+            counts[row[TOPIC]] = counts.get(row[TOPIC], 0) + row["n"]
         log.info("load finish %s", source.full_name)       # melt.clj:452-454
     return counts

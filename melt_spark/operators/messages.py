@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..canonical import ISO_MILLIS, canonical_json, canonical_struct
@@ -73,12 +73,12 @@ def tombstones(keys_df: DataFrame) -> DataFrame:
     )
 
 
-def validate_messages(df: DataFrame, keyed: bool = True) -> DataFrame:
-    """The reference spec-asserts every message (::message spec,
-    melt.clj:26-28,467-469). DataFrame restatement: raise rows violating the
-    contract into a constraint check — returns df filtered to violations
-    (empty == valid). Cheap: runs as one pass with the load itself."""
+def invalid_message(keyed: bool = True) -> Column:
+    """True for a message violating the contract: null topic, or (keyed)
+    null key. The reference spec-asserts every message (::message spec,
+    melt.clj:26-28,467-469); the DataFrame restatement is a predicate, so
+    `df.filter(invalid_message())` lists the violations (empty == valid)."""
     cond = F.col(TOPIC).isNull()
     if keyed:
         cond = cond | F.col(KEY).isNull()
-    return df.filter(cond)
+    return cond

@@ -10,6 +10,12 @@ source row's canonical serialization, which for us is the same `value` string
 Spark restatement: two projections of the diff output unioned into one
 Kafka-sink-shaped DataFrame (topic, key, value) — a single write, tombstones
 included as value=NULL rows.
+
+The reference sends the diff it already computed (melt.clj:570), not a
+fresh one. materialize_repair is the restatement: the repair batch is
+computed from the diff ONCE and held, so its count, its upsert/tombstone
+split and the send all read the same rows — the count is exactly what is
+sent even if the source moves in between, and the full-outer join runs once.
 """
 
 from __future__ import annotations
@@ -40,3 +46,16 @@ def sync_plan(diff_df: DataFrame,
 def sync_count(sync_df: DataFrame) -> int:
     """Total repair messages (reference returns the sum, melt.clj:504-508)."""
     return sync_df.count()
+
+
+def materialize_repair(diff_df: DataFrame,
+                       on: Sequence[str] = ("topic", "key")) -> DataFrame:
+    """sync_plan(diff_df), computed once and held (eager local checkpoint):
+    readers of the result re-run no diff join.
+
+    Known limits: the held batch is every out-of-sync row, so its size grows
+    with drift — a repair against an empty or far-behind topic holds the
+    whole table in executor block storage before the send. The checkpoint
+    cuts lineage, so an executor lost between it and the send fails the
+    send instead of recomputing the diff."""
+    return sync_plan(diff_df, on).localCheckpoint(eager=True)

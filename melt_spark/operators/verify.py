@@ -10,18 +10,25 @@ Spark restatement: a driver-side loop around the one-shuffle diff — the loop
 is control flow, the data never visits the driver. Sources of both sides are
 injected as thunks so tests drive it with deterministic state transitions and
 production wires JDBC + Kafka reads in.
+
+verify-sync repairs from the diff of its LAST failed attempt, as the
+reference does (melt.clj:570), rather than diffing again: that attempt's
+diff is materialized as the repair batch (sync.materialize_repair), so the
+batch is counted and sent without re-running the join. Earlier attempts keep
+the cheap LIMIT-1 check. A repairing call runs the diff twice (last attempt,
+post-sync re-verify) with retries=0.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from .diff import diff, diff_matches, deleted_keys
-from .sync import sync_plan, sync_count
+from .diff import diff, diff_matches
+from .sync import materialize_repair, sync_count
 
 
 @dataclass
@@ -57,14 +64,22 @@ def verify_sync(source_fn: Callable[[], DataFrame],
                 retry_delay_sec: float = 1.0,
                 sleep: Callable[[float], None] = time.sleep) -> VerifyResult:
     """verify-sync (melt.clj:548-571): on verify failure, send the repair
-    batch (upserts + tombstones) once, then ONE post-sync re-verify."""
-    res = verify(source_fn, topic_fn, retries, retry_delay_sec, sleep)
-    if res.matches:
-        return res
-    d = diff(source_fn(), topic_fn())
-    repair = sync_plan(d)
+    batch (upserts + tombstones) once, then ONE post-sync re-verify.
+
+    Attempts, sleeps and `attempts` match verify(); only the last attempt
+    differs: its diff is materialized, and an empty batch means it matched.
+    sync_count is the row count of exactly the frame handed to send_fn."""
+    if retries:
+        res = verify(source_fn, topic_fn, retries - 1, retry_delay_sec, sleep)
+        if res.matches:
+            return res
+        sleep(retry_delay_sec)
+    attempts = retries + 1
+    repair = materialize_repair(diff(source_fn(), topic_fn()))
     n = sync_count(repair)
+    if n == 0:
+        return VerifyResult(matches=True, attempts=attempts)
     send_fn(repair)
     post = verify(source_fn, topic_fn, retries=0, sleep=sleep)
-    return VerifyResult(matches=post.matches, attempts=res.attempts + 1,
+    return VerifyResult(matches=post.matches, attempts=attempts + 1,
                         synced=True, sync_count=n)

@@ -10,9 +10,12 @@ partitioning sized by env so the same code runs local[32] here and on a
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger("melt_spark.session")
 
 # Defaults chosen for the local[$SPARK_GRAFT_CPUS] test/bench environment.
 # On a real cluster, leave shuffle partitions to AQE coalescing: we set an
@@ -85,6 +88,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
         if k.startswith("spark.sql."):
             try:
                 spark.conf.set(k, v)
-            except Exception:
-                pass  # immutable at runtime in this Spark build — keep going
+            except Exception as e:  # immutable or unknown in this build
+                log.warning("tune_session: cannot set %s=%s: %s", k, v, e)
     return spark

@@ -50,14 +50,10 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one fixture table. Needs the session confs get_spark and
+    tune_session set (nanosAsLong, inferTimestampNTZ off); normalize_timestamps
+    still fixes NTZ columns if the latter is missing."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # prefer the reader-level fix: un-adjusted parquet timestamps arrive as
-    # session-TZ TIMESTAMP directly (no per-column cast in the plan)
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass  # unknown conf in some future build — the cast below still fixes it
     df = spark.read.parquet(path)
     for c in _ns_timestamp_cols(path):
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))

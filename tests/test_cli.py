@@ -80,7 +80,10 @@ def test_cli_sync_repairs_drift(spark, sf_dir, tmp_path, capsys):
     # repair, then verify clean
     assert main(["sync", "--sources", str(spec), "--parquet-dir", sf_dir,
                  "--outbox", outbox, "--batch-id", "2"]) == 0
-    capsys.readouterr()
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["total_out_of_sync"] == 2 and rep["repaired"]
+    sides = rep["topics"]["melt.main.region"]
+    assert sides["table_only"] == 1 and sides["topic_only"] == 1
     assert main(["sync", "--sources", str(spec), "--parquet-dir", sf_dir,
                  "--outbox", outbox, "--check-only"]) == 0
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])

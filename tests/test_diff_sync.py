@@ -107,6 +107,64 @@ def test_verify_sync_repairs_drift(spark):
                       send_fn=topic.produce, retries=1,
                       sleep=lambda s: None)
     assert res.synced and res.sync_count == 1 and res.matches
+    assert res.attempts == 3      # 2 verify attempts + the post-sync verify
+
+
+def test_verify_sync_sends_the_diff_it_found(spark):
+    """The repair is the diff of the last failed attempt (melt.clj:570),
+    held once: with retries=0 each thunk runs twice (that attempt, then the
+    post-sync verify), and send_fn gets a frame with no diff join left in
+    its plan whose row count is sync_count."""
+    rows = [(1, "ann", 10.0), (2, "bob", 20.0), (3, "cyd", 30.0)]
+    topic = TopicSim(spark)
+    # row 2 stale, row 3 missing, key 4 only in the topic (tombstone)
+    topic.produce(_msgs(spark, [(1, "ann", 10.0), (2, "bob", 99.0),
+                                (4, "dee", 40.0)]))
+    calls = {"source": 0, "topic": 0}
+
+    def source_fn():
+        calls["source"] += 1
+        return _msgs(spark, rows)
+
+    def topic_fn():
+        calls["topic"] += 1
+        return topic.state()
+
+    sent = []
+
+    def send(batch):
+        sent.append(batch)
+        topic.produce(batch)
+
+    res = verify_sync(source_fn, topic_fn, send_fn=send, retries=0,
+                      sleep=lambda s: None)
+    assert res.synced and res.matches and res.attempts == 2
+    assert calls == {"source": 2, "topic": 2}
+    [batch] = sent
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert "FullOuter" not in plan
+    assert batch.count() == res.sync_count == 3
+    assert batch.filter(F.col("value").isNull()).count() == 1
+
+
+def test_verify_sync_last_attempt_clean_sends_nothing(spark):
+    """A topic that converges by the last attempt is never repaired."""
+    rows = [(1, "ann", 10.0), (2, "bob", 20.0)]
+    topic = TopicSim(spark)
+    topic.produce(_msgs(spark, rows[:1]))
+    reads = {"n": 0}
+
+    def topic_fn():
+        reads["n"] += 1
+        if reads["n"] == 2:
+            topic.produce(_msgs(spark, rows[1:]))
+        return topic.state()
+
+    sent = []
+    res = verify_sync(lambda: _msgs(spark, rows), topic_fn,
+                      send_fn=sent.append, retries=1, sleep=lambda s: None)
+    assert res.matches and not res.synced and res.attempts == 2
+    assert res.sync_count == 0 and sent == []
 
 
 def test_keyless_source_value_as_key(spark):

@@ -7,7 +7,7 @@ import pytest
 
 from melt_spark.model import Source
 from melt_spark.operators.diff import diff, diff_matches
-from melt_spark.operators.messages import validate_messages
+from melt_spark.operators.messages import invalid_message
 from melt_spark.operators.sync import sync_plan
 from melt_spark.operators.verify import verify, verify_sync
 from melt_spark.sources.parquet import read_table
@@ -35,14 +35,14 @@ def test_keyless_messages_key_is_whole_row(spark, sf_dir):
         assert r.key == r.value
         assert r.key.startswith('{"s_name":')
     # the transform satisfied the message contract: no NULL keys remain
-    assert validate_messages(msgs).limit(1).count() == 0
+    assert msgs.filter(invalid_message()).limit(1).count() == 0
 
 
 def test_keyless_without_transform_flags_null_keys(spark, sf_dir):
     bare = Source(name="supplier", schema="main", keys=())
     msgs = bare.messages(_supplier_rows(spark, sf_dir))
     # keyless source without a key-supplying transform violates the contract
-    assert validate_messages(msgs).limit(1).count() == 1
+    assert msgs.filter(invalid_message()).limit(1).count() == 1
 
 
 def test_keyless_load_diff_sync_roundtrip(spark, sf_dir):

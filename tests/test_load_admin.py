@@ -1,6 +1,7 @@
 """Load driver (§3.1) and SQL Server admin DDL builders (§2.11)."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from melt_spark.model import Source
 from melt_spark.operators.load import load_sources
@@ -62,6 +63,39 @@ def test_load_validates_keyed_sources(spark):
     df = spark.createDataFrame([(1,)], "x long")
     with pytest.raises(ValueError, match="constraint"):
         load_sources([bad], read_fn=lambda s: df, send_fn=lambda d: None)
+
+
+def test_load_never_sends_an_invalid_source(spark):
+    bad = Source(name="nokeys", schema="main", keys=())
+    df = spark.createDataFrame([(1,), (2,)], "x long")
+    sent = []
+    with pytest.raises(ValueError, match="constraint"):
+        load_sources([bad], read_fn=lambda s: df, send_fn=sent.append)
+    assert sent == []
+
+
+def test_load_without_validation_sends_null_keys(spark):
+    keyless = Source(name="nokeys", schema="main", keys=())
+    df = spark.createDataFrame([(1,), (2,)], "x long")
+    sent = []
+    counts = load_sources([keyless], read_fn=lambda s: df,
+                          send_fn=sent.append, validate=False)
+    assert counts == {"melt.main.nokeys": 2}
+    [msgs] = sent
+    assert msgs.filter(F.col("key").isNull()).count() == 2
+
+
+def test_load_counts_every_topic_a_transform_routes_to(spark):
+    def route(msgs):
+        return msgs.withColumn("topic", F.when(
+            F.col("key_struct.id") % 2 == 0, F.lit("even"))
+            .otherwise(F.lit("odd")))
+
+    src = Source(name="nums", schema="main", keys=("id",),
+                 transforms=(route,))
+    df = spark.createDataFrame([(i,) for i in range(5)], "id long")
+    counts = load_sources([src], read_fn=lambda s: df, send_fn=lambda d: None)
+    assert counts == {"even": 3, "odd": 2}
 
 
 def test_admin_ddl_builders():

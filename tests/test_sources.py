@@ -68,3 +68,26 @@ def test_sample_table_and_db(spark, sf_dir, tmp_path):
     with open(paths[0]) as f:
         doc = json.load(f)
     assert doc["count"] == 3 and len(doc["sample"]) == 2
+
+
+def test_tune_session_logs_confs_it_cannot_set(caplog):
+    """A conf the session refuses is named in a warning, not swallowed;
+    the rest are still set."""
+    from melt_spark.session import tune_session
+
+    class Conf:
+        def __init__(self):
+            self.values = {}
+
+        def set(self, key, value):
+            if key == "spark.sql.session.timeZone":
+                raise RuntimeError("cannot modify")
+            self.values[key] = value
+
+    class Session:
+        conf = Conf()
+
+    with caplog.at_level("WARNING", logger="melt_spark.session"):
+        tune_session(Session)
+    assert "spark.sql.session.timeZone" in caplog.text
+    assert Session.conf.values["spark.sql.legacy.parquet.nanosAsLong"] == "true"

@@ -1,14 +1,15 @@
-"""Capture .explain('formatted') for bench queries into plans/r12/.
+"""Capture .explain('formatted') for bench queries into plans/r<N>/.
 
-Usage: python tools/capture_plans_r12.py before|after [name ...]
+Usage: python tools/capture_plans.py --round N before|after [name ...]
 
-Writes plans/r12/<name>_<tag>.txt for every headliner (or the named
-subset) — the round-11 optimization evidence trail: the judge checks
-plan-shape claims in OPTIMIZATION_r12.md against these files.
+Writes plans/r<N>/<name>_<tag>.txt for every headliner (or the named
+subset) — the optimization evidence trail: the plan-shape claims in
+OPTIMIZATION_r<N>.md are checked against these files.
 """
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
@@ -18,19 +19,23 @@ SF_DIR = "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", type=int, required=True)
+    ap.add_argument("tag", help="file suffix: before, after or a variant")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    tag, only, rnd = args.tag, set(args.names), f"r{args.round}"
 
     from bench import BENCH_QUERIES
     from melt_spark.plans.registry import constituents, entries
     from melt_spark.session import get_spark
 
-    spark = get_spark("capture-plans-r12")
+    spark = get_spark(f"capture-plans-{rnd}")
     jvm = spark._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
 
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r12"
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
 
     targets: list[tuple[str, object]] = list(BENCH_QUERIES)
