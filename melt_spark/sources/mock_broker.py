@@ -1,4 +1,4 @@
-"""File-backed mock message broker as a Spark 4 Python DataSource.
+"""File-backed mock message broker for Spark 4.
 
 The sandbox has no Kafka broker or spark-sql-kafka jar, so the reference's
 core I/O boundary (consumer melt.clj:239-299, producer melt.clj:431-443)
@@ -7,27 +7,30 @@ This module makes those paths run for real: a partitioned, append-only,
 offset-addressed commit log on the filesystem, exposed through the same four
 surfaces Spark's Kafka connector has —
 
-  * batch read with atomically-resolved starting/ending offsets (S8/T1),
-  * incremental refresh from saved offset watermarks (T5),
-  * a producer sink with key-hash partitioning and tombstones (S14/S15),
-  * a streaming tail (readStream) and a streaming sink (writeStream, T3),
-
-all via ``spark.read/readStream/write/writeStream.format("melt_broker")``.
+  * batch read with atomically-resolved starting/ending offsets (S8/T1) and
+    incremental refresh from saved offset watermarks (T5): ``read_topics``,
+    Spark's own JSON scan of the committed segments, no Python worker,
+  * a producer sink with key-hash partitioning and tombstones (S14/S15):
+    ``write_messages``, one ``mapInArrow`` job,
+  * a streaming tail and a streaming sink (T3): the Python DataSource
+    ``readStream/writeStream.format("melt_broker")``.
 
 Design (mirrors a real broker's log, scaled down):
   <root>/<topic>/.meta.json            {"partitions": N}
-  <root>/<topic>/p<k>/seg-<uuid>.jsonl one producer-task's records
+  <root>/<topic>/p<k>/seg-<write id>-<uuid>.jsonl
+      one producer task's records, a JSON object per line:
+      {"k": key, "v": value, "ts": timestamp, "i": index in the segment}
   <root>/<topic>/p<k>/manifest.json    {"segments": [{file, base, count}],
                                         "end": next_offset,
                                         "batches": [stream batch ids]}
 
 Segments are written by executor tasks (invisible until committed); the
-driver-side ``commit`` assigns base offsets and atomically replaces the
-manifest (os.replace), so readers always see a consistent prefix of the log
-— the same visibility contract as Kafka's high watermark. Offsets are dense
-per partition; a key is hashed (crc32, stand-in for Kafka's murmur2) to a
-fixed partition, so per-key order within a producer task is preserved —
-Kafka's per-producer guarantee.
+driver-side commit assigns base offsets (a record's offset is base + i) and
+atomically replaces the manifest (os.replace), so readers always see a
+consistent prefix of the log — the same visibility contract as Kafka's high
+watermark. Offsets are dense per partition; a key is hashed (crc32, stand-in
+for Kafka's murmur2) to a fixed partition, so per-key order within a
+producer task is preserved — Kafka's per-producer guarantee.
 
 On a real cluster the root must be shared storage; this is a test double
 for CI and local development, not a Kafka replacement. The production path
@@ -37,17 +40,18 @@ two are swappable.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import uuid
 import zlib
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Iterable, Iterator, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamWriter, DataSourceWriter,
-                                    InputPartition,
+from pyspark.sql import functions as F
+from pyspark.sql.datasource import (DataSource, DataSourceStreamWriter,
                                     SimpleDataSourceStreamReader,
                                     WriterCommitMessage)
 
@@ -55,6 +59,12 @@ ENVELOPE_SCHEMA = ("topic string, partition int, offset bigint,"
                    " timestamp bigint, key string, value string")
 
 WRITE_COLS = ("topic", "key", "value")
+
+SEGMENT_SCHEMA = "k string, v string, ts bigint, i bigint"
+
+# a committed segment the batch read keeps, and its partition's [lo, hi)
+_INDEX_SCHEMA = ("file string, topic string, partition int, base bigint,"
+                 " lo bigint, hi bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -137,10 +147,8 @@ def _scan_segments(root: str, topic: str, part: int, start: int,
 # offset-range resolution (driver side — the atomic snapshot that lets the
 # batch source drop the reference's "read twice" workaround, melt.clj:342-351)
 
-def _resolve_range(root: str, topic: str, part: int, starting, ending,
+def _resolve_range(man_end: int, topic: str, part: int, starting, ending,
                    ) -> tuple[int, int]:
-    man_end = _load_manifest(root, topic, part)["end"]
-
     def side(spec, default_earliest: bool) -> int:
         if spec == "earliest":
             return 0
@@ -162,21 +170,13 @@ def _parse_offsets_spec(spec: str):
 
 
 # ---------------------------------------------------------------------------
-# the DataSource
-
-@dataclass
-class _ScanPart(InputPartition):
-    topic: str
-    part: int
-    start: int
-    end: int
-
+# the DataSource (streaming tail and sink)
 
 class MeltBrokerDataSource(DataSource):
-    """format("melt_broker") — options:
-    path (broker root), subscribe (comma-separated topics; readers),
-    startingOffsets / endingOffsets ('earliest'|'latest'|Kafka JSON form;
-    batch reader), partitions (writer topic auto-create, default 4)."""
+    """readStream/writeStream.format("melt_broker") — options: path (broker
+    root), subscribe (comma-separated topics; reader), startingOffsets
+    ('earliest'|'latest'; reader), partitions (writer topic auto-create,
+    default 4). Batch I/O is read_topics and write_messages."""
 
     @classmethod
     def name(cls) -> str:
@@ -185,50 +185,11 @@ class MeltBrokerDataSource(DataSource):
     def schema(self) -> str:
         return ENVELOPE_SCHEMA
 
-    def reader(self, schema) -> "MeltBrokerReader":
-        return MeltBrokerReader(self.options)
-
     def simpleStreamReader(self, schema) -> "MeltBrokerStreamReader":
         return MeltBrokerStreamReader(self.options)
 
-    def writer(self, schema, overwrite: bool) -> "MeltBrokerWriter":
-        if overwrite:
-            raise ValueError("melt_broker is append-only (a commit log); "
-                             "overwrite/truncate is not supported")
-        return MeltBrokerWriter(self.options)
-
     def streamWriter(self, schema, overwrite: bool) -> "MeltBrokerStreamWriter":
         return MeltBrokerStreamWriter(self.options)
-
-
-class MeltBrokerReader(DataSourceReader):
-    """Bounded snapshot read (S8/T1). Offset ranges are resolved ONCE at
-    planning time from the manifests — concurrent producers don't move the
-    goalposts mid-read."""
-
-    def __init__(self, options):
-        self.root = options["path"]
-        self.topics = [t for t in options.get("subscribe", "").split(",") if t]
-        starting = _parse_offsets_spec(options.get("startingoffsets",
-                                                   "earliest"))
-        ending = _parse_offsets_spec(options.get("endingoffsets", "latest"))
-        self.ranges: list[_ScanPart] = []
-        for topic in self.topics:
-            for p in range(topic_partitions(self.root, topic)):
-                s, e = _resolve_range(self.root, topic, p, starting, ending)
-                if e > s:
-                    self.ranges.append(_ScanPart(topic, p, s, e))
-
-    def partitions(self):
-        # one Spark input partition per broker partition slice — the same
-        # parallelism contract as the Kafka connector
-        return self.ranges or [_ScanPart("", -1, 0, 0)]
-
-    def read(self, partition: _ScanPart):
-        if partition.part < 0:
-            return iter(())
-        return _scan_segments(self.root, partition.topic, partition.part,
-                              partition.start, partition.end)
 
 
 class MeltBrokerStreamReader(SimpleDataSourceStreamReader):
@@ -281,14 +242,15 @@ class _SegmentMsg(WriterCommitMessage):
     segments: list  # [(topic, part, filename, count), ...]
 
 
-def _write_segments(root: str, default_partitions: int,
-                    iterator: Iterator) -> _SegmentMsg:
-    """Executor side: bucket rows by (topic, key-hash partition), append one
-    segment file per bucket. Files are invisible until the driver commits
-    them into the manifest."""
+def _write_segments(root: str, default_partitions: int, records: Iterable,
+                    write_id: str) -> _SegmentMsg:
+    """Executor side: bucket record dicts by (topic, key-hash partition),
+    append one segment file per bucket, each record with its index "i" in
+    it. Files are invisible until the driver commits them into the
+    manifest."""
     buckets: dict[tuple[str, int], list[dict]] = {}
     nparts: dict[str, int] = {}
-    for row in iterator:
+    for row in records:
         topic = row["topic"]
         if topic not in nparts:
             try:
@@ -298,13 +260,13 @@ def _write_segments(root: str, default_partitions: int,
                 # and meta publish is atomic)
                 create_topic(root, topic, default_partitions)
                 nparts[topic] = topic_partitions(root, topic)
-        part = key_partition(row["key"], nparts[topic])
-        ts = row["timestamp"] if "timestamp" in row.__fields__ else None
-        buckets.setdefault((topic, part), []).append(
-            {"k": row["key"], "v": row["value"], "ts": ts})
+        recs = buckets.setdefault(
+            (topic, key_partition(row["key"], nparts[topic])), [])
+        recs.append({"k": row["key"], "v": row["value"],
+                     "ts": row.get("timestamp"), "i": len(recs)})
     segments = []
     for (topic, part), recs in sorted(buckets.items()):
-        fname = f"seg-{uuid.uuid4().hex}.jsonl"
+        fname = f"seg-{write_id}-{uuid.uuid4().hex}.jsonl"
         path = os.path.join(_part_dir(root, topic, part), fname)
         with open(path, "w") as f:
             for r in recs:
@@ -364,25 +326,6 @@ def _abort_segments(root: str, messages) -> None:
                 pass
 
 
-class MeltBrokerWriter(DataSourceWriter):
-    """Producer sink (S14): at-least-once per save() call, per-key ordering
-    within a task (Kafka's per-producer contract). NULL value = tombstone
-    (S15) — stored, not dropped; compaction interprets it."""
-
-    def __init__(self, options):
-        self.root = options["path"]
-        self.default_partitions = int(options.get("partitions", 4))
-
-    def write(self, iterator):
-        return _write_segments(self.root, self.default_partitions, iterator)
-
-    def commit(self, messages):
-        _commit_segments(self.root, messages, None)
-
-    def abort(self, messages):
-        _abort_segments(self.root, messages)
-
-
 class MeltBrokerStreamWriter(DataSourceStreamWriter):
     """writeStream sink (T3): per-micro-batch commit with batch-id dedup, so
     a restarted query that replays its last batch appends nothing twice."""
@@ -390,9 +333,12 @@ class MeltBrokerStreamWriter(DataSourceStreamWriter):
     def __init__(self, options):
         self.root = options["path"]
         self.default_partitions = int(options.get("partitions", 4))
+        self.write_id = uuid.uuid4().hex
 
     def write(self, iterator):
-        return _write_segments(self.root, self.default_partitions, iterator)
+        return _write_segments(self.root, self.default_partitions,
+                               (row.asDict() for row in iterator),
+                               self.write_id)
 
     def commit(self, messages, batchId):
         _commit_segments(self.root, messages, batchId)
@@ -411,24 +357,73 @@ def register(spark: SparkSession) -> None:
 def read_topics(spark: SparkSession, broker_path: str, topics: Sequence[str],
                 starting_offsets: str = "earliest",
                 ending_offsets: str = "latest") -> DataFrame:
-    """Bounded snapshot (mirrors kafka.read_topics; S8/T1)."""
-    return (spark.read.format("melt_broker")
-            .option("path", broker_path)
-            .option("subscribe", ",".join(topics))
-            .option("startingOffsets", starting_offsets)
-            .option("endingOffsets", ending_offsets)
-            .load())
+    """Bounded snapshot (mirrors kafka.read_topics; S8/T1). Offset ranges
+    are resolved ONCE here from the manifests — concurrent producers don't
+    move the goalposts mid-read. Spark's JSON scan reads only the committed
+    segments that overlap them (the file-name filter prunes the listing, so
+    an uncommitted file is never opened), and a broadcast join on the file
+    name turns each record's index into its offset."""
+    starting = _parse_offsets_spec(starting_offsets)
+    ending = _parse_offsets_spec(ending_offsets)
+    index = {c: [] for c in ("file", "topic", "partition", "base", "lo", "hi")}
+    for topic in topics:
+        for p in range(topic_partitions(broker_path, topic)):
+            man = _load_manifest(broker_path, topic, p)
+            lo, hi = _resolve_range(man["end"], topic, p, starting, ending)
+            for s in man["segments"]:
+                if s["base"] < hi and s["base"] + s["count"] > lo:
+                    for col, v in zip(index, (s["file"], topic, p, s["base"],
+                                              lo, hi)):
+                        index[col].append(v)
+    # a path per topic, not per file: over 32 paths cost a file-listing job
+    records = (spark.read.schema(SEGMENT_SCHEMA)
+               .option("mode", "FAILFAST")
+               .option("recursiveFileLookup", "true")
+               .option("pathGlobFilter", "seg-*.jsonl")
+               .json([os.path.join(broker_path, t) for t in topics])
+               .select("*", F.col("_metadata.file_name").alias("file"))
+               .filter(F.col("file").isin(index["file"])))
+    # Arrow makes a LocalRelation; a list would make an RDD, ~8x slower here
+    segments = spark.createDataFrame(pa.table(index), _INDEX_SCHEMA)
+    i = F.coalesce("i", F.raise_error(F.lit("segment record without 'i'")))
+    return (records.join(F.broadcast(segments), "file")
+            .withColumn("offset", F.col("base") + i)
+            .filter((F.col("offset") >= F.col("lo"))
+                    & (F.col("offset") < F.col("hi")))
+            .select("topic", "partition", "offset",
+                    F.col("ts").alias("timestamp"), F.col("k").alias("key"),
+                    F.col("v").alias("value")))
 
 
 def write_messages(messages: DataFrame, broker_path: str,
                    partitions: int = 4) -> None:
-    """Producer sink (mirrors kafka.write_messages; S14/S15)."""
-    (messages.select(*WRITE_COLS)
-     .write.format("melt_broker")
-     .option("path", broker_path)
-     .option("partitions", partitions)
-     .mode("append")
-     .save())
+    """Producer sink (mirrors kafka.write_messages; S14/S15): one Arrow job
+    whose tasks write segments, committed by the driver in task order —
+    at-least-once per call, per-key ordering within a task (Kafka's
+    per-producer contract). NULL value = tombstone, stored, not dropped.
+    If the job fails, every segment this call wrote is removed and the
+    manifests are untouched."""
+    write_id = uuid.uuid4().hex
+
+    def produce(batches):
+        segs = _write_segments(
+            broker_path, partitions,
+            (r for b in batches for r in b.to_pylist()), write_id).segments
+        if segs:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c) for c in zip(*segs)],
+                names=["topic", "part", "file", "count"])
+
+    try:
+        written = messages.select(*WRITE_COLS).mapInArrow(
+            produce, "topic string, part bigint, file string, count bigint"
+        ).collect()
+    except Exception:
+        for path in glob.glob(os.path.join(glob.escape(broker_path), "*",
+                                           "p*", f"seg-{write_id}-*")):
+            os.remove(path)
+        raise
+    _commit_segments(broker_path, [_SegmentMsg(segments=written)], None)
 
 
 def count_topic(spark: SparkSession, broker_path: str, topic: str) -> int:
@@ -439,8 +434,11 @@ def count_topic(spark: SparkSession, broker_path: str, topic: str) -> int:
 def tail_topics(spark: SparkSession, broker_path: str,
                 topics: Sequence[str],
                 starting_offsets: str = "earliest") -> DataFrame:
-    """Continuous tail (S9): a streaming DataFrame of the record envelope."""
+    """Continuous tail (S9): a streaming DataFrame of the record envelope.
+    The schema is given, so starting the stream skips the planner round
+    trip that would only return it."""
     return (spark.readStream.format("melt_broker")
+            .schema(ENVELOPE_SCHEMA)
             .option("path", broker_path)
             .option("subscribe", ",".join(topics))
             .option("startingOffsets", starting_offsets)

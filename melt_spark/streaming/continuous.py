@@ -37,10 +37,6 @@ def stream_from_parquet(spark: SparkSession, path: str,
     instant is unchanged."""
     from pyspark.sql.types import StructField, StructType, TimestampNTZType, \
         TimestampType
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
     if schema is None:
         schema = spark.read.parquet(path).schema
     # defensive: a caller-provided (or stale-conf-inferred) schema may still

@@ -6,6 +6,8 @@ Covers SURVEY §2 S8/S10/S14/S15/T1/T3/T5 as *running* code (round 1 could
 only restate them — no broker in the sandbox)."""
 
 import json
+import os
+import time
 
 import pytest
 from pyspark.sql import Row
@@ -162,7 +164,150 @@ def test_stream_writer_idempotent_batches(spark, broker, tmp_path):
     assert mb.count_topic(spark, broker, "melt.sink") == 10
     # replaying the same committed batch id appends nothing (ledger dedup)
     man_before = mb.end_offsets(broker, "melt.sink")
-    msg = mb._write_segments(broker, 2, iter([
-        Row(topic="melt.sink", key="s0", value="dup")]))
+    msg = mb._write_segments(broker, 2, [
+        {"topic": "melt.sink", "key": "s0", "value": "dup"}], "replay")
     mb._commit_segments(broker, [msg], 0)  # batch 0 already in ledger
     assert mb.end_offsets(broker, "melt.sink") == man_before
+
+
+# ---------------------------------------------------------------------------
+# the native batch read and the Arrow write, against the log's own reader
+
+def _walk(root, topic, start=None, end=None):
+    """The log as an independent _scan_segments walk of the manifests."""
+    rows = []
+    for p, e in mb.end_offsets(root, topic).items():
+        rows += mb._scan_segments(root, topic, p, (start or {}).get(p, 0),
+                                  (end or {}).get(p, e))
+    return sorted(rows, key=lambda r: (r[1], r[2]))
+
+
+def _read(spark, root, topic, **kw):
+    return sorted(map(tuple, mb.read_topics(spark, root, [topic], **kw)
+                      .collect()), key=lambda r: (r[1], r[2]))
+
+
+def _stream_into(spark, root, topic, rows, ckpt):
+    src = ckpt / "src"
+    src.mkdir(parents=True)
+    (src / "a.json").write_text("\n".join(
+        json.dumps({"topic": topic, "key": k, "value": v}) for k, v in rows))
+    q = (spark.readStream.schema("topic string, key string, value string")
+         .json(str(src)).writeStream.format("melt_broker")
+         .option("path", root)
+         .option("checkpointLocation", str(ckpt / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+
+
+def test_read_topics_equals_segment_walk(spark, broker, tmp_path):
+    """Equivalence guard for the native read: several write_messages calls
+    plus the stream sink, read in full and over a range whose ends fall
+    inside segments, give exactly the rows the manifests' own walk gives."""
+    topic = "melt.eq"
+    mb.create_topic(broker, topic, partitions=3)
+    mb.write_messages(_msgs(spark, [
+        (topic, f"k{i}", json.dumps({"n": i, "s": "é✓"})) for i in range(60)
+    ]).coalesce(1), broker)
+    mb.write_messages(_msgs(spark, [
+        (topic, f"k{i}", None if i % 3 else f"u{i}") for i in range(0, 60, 4)
+    ]), broker)
+    _stream_into(spark, broker, topic,
+                 [(f"s{i}", str(i)) for i in range(12)], tmp_path)
+    mb.write_messages(_msgs(spark, [(topic, None, "null key")]), broker)
+
+    full = _read(spark, broker, topic)
+    assert full == _walk(broker, topic)
+    assert len(full) == sum(mb.end_offsets(broker, topic).values()) == 88
+
+    ends = mb.end_offsets(broker, topic)
+    start = {p: 3 for p in ends}
+    end = {p: e - 2 for p, e in ends.items()}
+    for p in ends:  # both ends strictly inside a committed segment
+        segs = mb._load_manifest(broker, topic, p)["segments"]
+        for off in (start[p], end[p]):
+            assert any(s["base"] < off < s["base"] + s["count"] for s in segs)
+    bounded = _read(
+        spark, broker, topic,
+        starting_offsets=json.dumps({topic: {str(p): o
+                                             for p, o in start.items()}}),
+        ending_offsets=json.dumps({topic: {str(p): o
+                                           for p, o in end.items()}}))
+    assert bounded == _walk(broker, topic, start, end)
+    assert len(bounded) == 88 - 5 * len(ends)
+
+
+def test_uncommitted_segments_are_invisible(spark, broker):
+    """A segment a task wrote but the driver never committed is not read —
+    not even opened: a garbage uncommitted file does not fail the scan."""
+    topic = "melt.uncommitted"
+    mb.create_topic(broker, topic, partitions=2)
+    mb.write_messages(_msgs(spark, [(topic, "a", "1"), (topic, "b", "2")]),
+                      broker)
+    before = _read(spark, broker, topic)
+    mb._write_segments(broker, 2, [{"topic": topic, "key": "c",
+                                    "value": "3"}], "orphan")
+    with open(os.path.join(broker, topic, "p0", "seg-torn.jsonl"), "w") as f:
+        f.write('{"k": "torn", "v"')
+    assert _read(spark, broker, topic) == before == _walk(broker, topic)
+    assert len(before) == 2
+
+
+def test_corrupt_committed_segment_raises(spark, broker):
+    """A committed line that is not a segment record fails the read; it never
+    comes back as a NULL row or a dropped one."""
+    topic = "melt.corrupt"
+    mb.create_topic(broker, topic, partitions=1)
+    mb.write_messages(_msgs(spark, [(topic, f"k{i}", str(i))
+                                    for i in range(3)]).coalesce(1), broker)
+    seg = mb._load_manifest(broker, topic, 0)["segments"][0]["file"]
+    path = os.path.join(broker, topic, "p0", seg)
+    with open(path) as f:
+        good = f.read().splitlines()
+    for bad, error in (('{"k": "k1", "v": "1", "ts": nul', "MALFORMED"),
+                       ('{"k": "k1", "v": "1"}', "without 'i'")):
+        with open(path, "w") as f:
+            f.write("\n".join([good[0], bad, good[2]]) + "\n")
+        with pytest.raises(Exception, match=error):
+            mb.read_topics(spark, broker, [topic]).collect()
+
+
+def test_failed_write_leaves_log_unchanged(spark, broker):
+    """The input fails in one task after another task has written its
+    segment: the manifests do not move and no segment file of the call is
+    left behind."""
+    from pyspark.sql.functions import udf
+
+    topic = "melt.failed_write"
+    mb.create_topic(broker, topic, partitions=1)
+    mb.write_messages(_msgs(spark, [(topic, "a", "1")]), broker)
+    pdir = os.path.join(broker, topic, "p0")
+    files, ends = set(os.listdir(pdir)), mb.end_offsets(broker, topic)
+
+    def value(key, v):
+        if key != "boom":
+            return v
+        deadline = time.time() + 60  # fail once the peer's segment exists
+        while (len([f for f in os.listdir(pdir) if f.startswith("seg-")])
+               < 2 and time.time() < deadline):
+            time.sleep(0.05)
+        raise RuntimeError("input failed mid-job")
+
+    rows = [(topic, "ok", "1"), (topic, "boom", "2")]
+    msgs = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+                                 "topic string, key string, value string")
+    with pytest.raises(Exception, match="input failed mid-job"):
+        mb.write_messages(msgs.withColumn("value", udf(value)("key", "value")),
+                          broker)
+    assert mb.end_offsets(broker, topic) == ends
+    assert set(os.listdir(pdir)) == files
+
+
+def test_read_plan_has_no_python_node(spark, broker):
+    """read_topics is planned and run by the SQL engine alone."""
+    df = mb.read_topics(spark, broker, ["melt.t1"])
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Scan json" in plan
+    for marker in ("Python", "InPandas", "InArrow"):
+        assert marker not in plan, plan
